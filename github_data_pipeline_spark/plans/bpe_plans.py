@@ -136,6 +136,7 @@ def learned_merges_artifact(
             sf_dir,
             "bpe_merges",
             f"{N_MERGES}:{MIN_FREQ}:{PRETOKEN_PATTERN}",
+            sources=("documents",),
         )
         + ".json"
     )

@@ -216,7 +216,9 @@ def docs_stream_artifact(spark: SparkSession, sf_dir: str) -> str:
 
     from .artifacts import artifact_cache_path
 
-    path = artifact_cache_path(sf_dir, "docs_stream2", "files2:v1")
+    path = artifact_cache_path(
+        sf_dir, "docs_stream2", "files2:v1", sources=("documents",)
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"

@@ -735,7 +735,10 @@ def verified_pair_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .artifacts import artifact_cache_path
 
     path = artifact_cache_path(
-        sf_dir, "neardup_pairs", f"jaccard4of5:dfcap{NEARDUP_DF_CAP}"
+        sf_dir,
+        "neardup_pairs",
+        f"jaccard4of5:dfcap{NEARDUP_DF_CAP}",
+        sources=("documents",),
     )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         pairs = neardup_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")

@@ -53,7 +53,9 @@ def partitioned_fact_artifact(spark: SparkSession, sf_dir: str) -> str:
     """orders x customer -> (o_orderkey, cents, nationkey), persisted
     partitioned BY nationkey — built once per sf_dir (same atomic
     promote-by-rename discipline as verified_pair_artifact)."""
-    path = artifact_cache_path(sf_dir, "dpp_fact", "nationkey:v1")
+    path = artifact_cache_path(
+        sf_dir, "dpp_fact", "nationkey:v1", sources=("orders", "customer")
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         orders = load_table(spark, sf_dir, "orders")
         cust = load_table(spark, sf_dir, "customer")

@@ -243,7 +243,9 @@ def _events_json_copy(spark: SparkSession, sf_dir: str) -> str:
 
     from .artifacts import artifact_cache_path
 
-    path = artifact_cache_path(sf_dir, "events_json", extra_key=_RT_TS_FMT)
+    path = artifact_cache_path(
+        sf_dir, "events_json", extra_key=_RT_TS_FMT, sources=("events",)
+    )
     if not os.path.isdir(path):
         tmp = path + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)

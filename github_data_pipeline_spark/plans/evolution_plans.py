@@ -60,7 +60,9 @@ def orders_two_generations(spark: SparkSession, sf_dir: str) -> str:
     cache: ``gen1/`` (even orderkeys, NO o_channel column) and
     ``gen2/`` (odd orderkeys, WITH o_channel). Built once per sf_dir,
     atomic promote-by-rename of the parent directory."""
-    path = artifact_cache_path(sf_dir, "orders_two_gens", "gens:v1")
+    path = artifact_cache_path(
+        sf_dir, "orders_two_gens", "gens:v1", sources=("orders",)
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         o = load_table(spark, sf_dir, "orders")
         tmp = f"{path}.tmp.{os.getpid()}"

@@ -57,7 +57,9 @@ def events_stream_artifact(spark: SparkSession, sf_dir: str) -> str:
 
     from .artifacts import artifact_cache_path
 
-    path = artifact_cache_path(sf_dir, "events_stream2", "files2:v1")
+    path = artifact_cache_path(
+        sf_dir, "events_stream2", "files2:v1", sources=("events",)
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"

@@ -384,7 +384,7 @@ def events_halves_artifact(spark: SparkSession, sf_dir: str) -> str:
     on every call (~0.65 s/entry at sf0.1) and now symlink the cached
     files into each run's fresh scratch dir, while every drain still
     computes its state from the files alone. Atomic promote-by-rename;
-    keyed on the corpus mtime like every persisted artifact."""
+    keyed on the events table's mtime."""
     import glob
     import os
     import shutil
@@ -392,7 +392,9 @@ def events_halves_artifact(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.tables import load_table
     from .artifacts import artifact_cache_path
 
-    path = artifact_cache_path(sf_dir, "events_halves", "parity:v1")
+    path = artifact_cache_path(
+        sf_dir, "events_halves", "parity:v1", sources=("events",)
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         ev = load_table(spark, sf_dir, "events")
         tmp = f"{path}.tmp.{os.getpid()}"

@@ -110,7 +110,9 @@ def winnowed_fp_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .artifacts import artifact_cache_path
 
-    path = artifact_cache_path(sf_dir, "winnow_fps", f"k{WIN_K}w{WIN_W}")
+    path = artifact_cache_path(
+        sf_dir, "winnow_fps", f"k{WIN_K}w{WIN_W}", sources=("documents",)
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         fps = _winnowed(spark, sf_dir)
         tmp = f"{path}.tmp.{os.getpid()}"

@@ -38,8 +38,32 @@ BROADCAST_DIMS = ("region", "nation", "supplier", "part", "customer")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: (abs path, mtime_ns) -> inferred StructType. Schema inference lists
-#: the directory and reads parquet footers on the DRIVER on every
+def path_mtime_ns(path: str) -> int:
+    """Newest ``mtime_ns`` of ``path`` and its direct children; 0 when
+    ``path`` is missing.
+
+    A full overwrite recreates a table directory and bumps its own
+    mtime, but a partition-scoped rewrite (files replaced inside an
+    existing ``key=value/`` subdirectory) bumps only that child's, so
+    the child mtimes are folded in. One ``scandir`` per call."""
+    try:
+        newest = os.stat(path).st_mtime_ns
+    except OSError:
+        return 0
+    try:
+        with os.scandir(path) as entries:
+            for e in entries:
+                try:
+                    newest = max(newest, e.stat(follow_symlinks=False).st_mtime_ns)
+                except OSError:
+                    pass
+    except OSError:  # a plain file, or removed in between
+        pass
+    return newest
+
+
+#: (abs path, path_mtime_ns) -> inferred StructType. Schema inference
+#: lists the directory and reads parquet footers on the DRIVER on every
 #: ``spark.read.parquet`` call — measured 100-190 ms per table at
 #: sf0.1, paid by every builder invocation (158 builders x 1-5 tables
 #: per bench pass). The inferred schema is a deterministic property of
@@ -47,18 +71,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: cache pattern of guide §6), so it is cached per (path, mtime) and
 #: handed to the reader, which skips inference; the scan itself still
 #: reads the parquet per execution. The mtime key invalidates on any
-#: rewrite; a StructType is plain Python, so the cache survives
-#: session restarts harmlessly.
+#: rewrite, partition-scoped ones included; a StructType is plain
+#: Python, so the cache survives session restarts harmlessly.
 _SCHEMA_CACHE: dict = {}
 
 
 def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     key_path = os.path.abspath(path)
-    try:
-        mtime = os.stat(key_path).st_mtime_ns
-    except OSError:
-        mtime = 0
-    key = (key_path, mtime)
+    key = (key_path, path_mtime_ns(key_path))
     st = _SCHEMA_CACHE.get(key)
     if st is None:
         df = spark.read.parquet(path)

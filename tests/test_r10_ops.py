@@ -53,7 +53,8 @@ def test_events_json_copy_swallows_benign_lost_race(
     monkeypatch.setattr(os, "replace", real_replace)
     assert os.path.isdir(path)
     assert path == artifact_cache_path(
-        sf_dir, "events_json", extra_key=events_plans._RT_TS_FMT
+        sf_dir, "events_json", extra_key=events_plans._RT_TS_FMT,
+        sources=("events",),
     )
 
 

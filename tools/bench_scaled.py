@@ -28,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -70,6 +71,9 @@ def _scaled_dir(spark, factor: int, skew: str) -> str:
     out = os.path.join(TMP_ROOT, f"f{factor}_{skew}")
     marker = os.path.join(out, "_BUILT")
     if not os.path.exists(marker):
+        # no marker: any ``out`` is a half-written earlier build, and
+        # building over it would append a second copy of its rows
+        shutil.rmtree(out, ignore_errors=True)
         build_scaled_dir(spark, "/root/testdata/sf0.1", factor, out, skew)
         with open(marker, "w"):
             pass

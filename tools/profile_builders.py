@@ -15,6 +15,10 @@ builders execute (localCheckpoint, collect-gated decisions, streaming
 drains) measure that execution; the table marks which is which via the
 ``exec`` heuristic (builder runs Spark jobs).
 
+Jobs are counted through the public status tracker: each timed builder
+call runs under its own job group, and a streaming drain's micro-batch
+jobs run under the stream's run id, recorded by a query listener.
+
 Usage:  python tools/profile_builders.py [sf_dir]   # writes the table
 """
 
@@ -25,8 +29,31 @@ import os
 import sys
 import time
 
+from pyspark.sql.streaming import StreamingQueryListener
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+class _StreamRuns(StreamingQueryListener):
+    """Run ids of the streaming queries started since the last clear;
+    Spark runs each query's micro-batch jobs under its run id as the
+    job group."""
+
+    def __init__(self) -> None:
+        self.run_ids: list[str] = []
+
+    def onQueryStarted(self, event) -> None:
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
 
 
 def main() -> int:
@@ -38,9 +65,16 @@ def main() -> int:
     from github_data_pipeline_spark.plans import all_plans
     from github_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("profile-builders", master=f"local[{cpus}]")
+    # the status store must keep every timed job until they are counted
+    spark = get_spark(
+        "profile-builders",
+        master=f"local[{cpus}]",
+        extra_conf={"spark.ui.retainedJobs": "100000"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
+    streams = _StreamRuns()
+    spark.streams.addListener(streams)
     registry = all_plans()
     names = [q.name for q in registry if q.oracle is not None]
 
@@ -50,17 +84,27 @@ def main() -> int:
         _drop_leftover_rdd_blocks(spark)
 
     out: dict[str, dict] = {}
-    for _ in range(2):
+    for i in range(2):
         for n in names:
-            jobs_before = sc._jsc.sc().dagScheduler().nextJobId()
+            group = f"profile-builders:{i}:{n}"
+            streams.run_ids.clear()
+            sc.setJobGroup(group, n)
             t0 = time.time()
             registry[n].builder(spark, sf_dir)
             el = round(time.time() - t0, 3)
-            jobs_after = sc._jsc.sc().dagScheduler().nextJobId()
+            sc.setLocalProperty("spark.jobGroup.id", None)
             _drop_leftover_rdd_blocks(spark)
             cur = out.get(n)
             if cur is None or el < cur["s"]:
-                out[n] = {"s": el, "jobs": jobs_after - jobs_before}
+                out[n] = {"s": el, "groups": [group, *streams.run_ids]}
+    # counted after the passes: the status store learns of jobs from
+    # the asynchronous listener bus, so a count taken right after the
+    # builder returns can miss its last jobs
+    spark.streams.removeListener(streams)
+    time.sleep(1)
+    tracker = sc.statusTracker()
+    for v in out.values():
+        v["jobs"] = sum(len(tracker.getJobIdsForGroup(g)) for g in v.pop("groups"))
 
     rows = sorted(out.items(), key=lambda kv: -kv[1]["s"])
     total = round(sum(v["s"] for v in out.values()), 1)
